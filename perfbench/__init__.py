@@ -1,0 +1,5 @@
+"""Layered benchmark of the parquet_python_spark codec engine.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see perfbench/README.md.
+"""
