@@ -7,7 +7,7 @@ Build the artifact, then submit:
     spark-submit --master <cluster-or-local[N]> \
         --py-files dist/parquet_python_spark.zip \
         jobs/encode_job.py --input /path/tokens --output /path/encoded \
-        [--mode narrow|grouped] [--target-tokens N] [--verify]
+        [--mode files|narrow|grouped] [--target-tokens N] [--verify]
 
 The job is resumable: re-submitting after a failure skips every partition
 already recorded in <output>/metrics for the same input snapshot
@@ -36,11 +36,10 @@ def main() -> None:
     p.add_argument(
         "--mode",
         default="files",
-        choices=["files", "narrow", "narrow-ipc", "grouped"],
-        help="files: python-native scan + worker-native block writes "
-        "(fastest); narrow: zero-shuffle mapInArrow over the JVM scan; "
-        "narrow-ipc: python-native scan, JVM block writer; "
-        "grouped: salted-shuffle source-pure chunks",
+        choices=["files", "narrow", "grouped"],
+        help="files (default): python-native scan + worker-native block "
+        "writes (fastest); narrow: zero-shuffle mapInArrow over the JVM "
+        "scan; grouped: salted-shuffle source-pure chunks",
     )
     p.add_argument("--target-tokens", type=int, default=None,
                    help="tokens per chunk for grouped-mode salt planning")

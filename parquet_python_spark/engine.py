@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import filescan
 from .codecs import (
     decode_column,
     encode_column,
@@ -359,21 +360,6 @@ def resolve_input_files(input_path: str) -> list[str]:
     return list_input_files(input_path)
 
 
-def _read_task_table(path: str, rg_start: int, rg_end: int):
-    """Read one planned task's data (whole file or a row-group range).
-
-    use_threads=False: each of N concurrent workers would otherwise spawn a
-    full-width Arrow thread pool (N*cores runnable threads -> scheduler
-    collapse at local[32])."""
-    import pyarrow.parquet as pq
-
-    if rg_start < 0:
-        return pq.read_table(path, use_threads=False)
-    return pq.ParquetFile(path).read_row_groups(
-        list(range(rg_start, rg_end)), use_threads=False
-    )
-
-
 def encode_table_files(
     spark: SparkSession,
     input_path: str,
@@ -401,26 +387,32 @@ def encode_table_files(
     and an in-place rewrite changes the key and re-encodes.
     """
     files = files if files is not None else resolve_input_files(input_path)
-    tasks = _plan_file_tasks(files, max_task_bytes)
-    # JVM-native range dispatch, one partition per task; tasks resolve
-    # from the closure list (same rationale + sizing note as
-    # _decode_files_df: no exchange, no python-RDD hop)
-    tasks_local = list(tasks)
-    paths_df = spark.range(
-        len(tasks_local), numPartitions=max(len(tasks_local), 1)
+    enc = _file_task_encoder(snapshot_id, with_ref_baseline, skip_parts, part_prefix)
+    return filescan.map_items(
+        spark, _plan_file_tasks(files, max_task_bytes), enc, BLOCKS_SCHEMA
     )
 
-    def enc(batches):
-        for batch in batches:
-            for i in batch.column("id").to_pylist():
-                tkey, path, rg_start, rg_end = tasks_local[int(i)]
-                tbl = _read_task_table(path, rg_start, rg_end)
-                yield from _encode_split_by_source(
-                    tbl, tkey, snapshot_id, with_ref_baseline,
-                    skip_parts, part_prefix,
-                )
 
-    return paths_df.mapInArrow(enc, schema=BLOCKS_SCHEMA)
+def _file_task_encoder(snapshot_id, with_ref_baseline, skip_parts, part_prefix):
+    """Per-task body of the files-mode encoders: read one planned
+    (task_key, path, rg_start, rg_end) task — the whole file, or a
+    row-group range — and yield its blocks batches."""
+
+    def enc(task):
+        import pyarrow.parquet as pq
+
+        tkey, path, rg_start, rg_end = task
+        if rg_start < 0:
+            tbl = pq.read_table(path, use_threads=False)
+        else:
+            tbl = pq.ParquetFile(path).read_row_groups(
+                list(range(rg_start, rg_end)), use_threads=False
+            )
+        yield from _encode_split_by_source(
+            tbl, tkey, snapshot_id, with_ref_baseline, skip_parts, part_prefix
+        )
+
+    return enc
 
 
 def encode_table_files_native(
@@ -451,57 +443,40 @@ def encode_table_files_native(
     os.makedirs(blocks_dir, exist_ok=True)
     tasks = _plan_file_tasks(files, max_task_bytes)
     _remove_stale_generations(blocks_dir, tasks)
-    # JVM-native range dispatch, one partition per task; tasks resolve
-    # from the closure list (same rationale + sizing note as
-    # _decode_files_df: no exchange, no python-RDD hop)
-    tasks_local = list(tasks)
-    paths_df = spark.range(
-        len(tasks_local), numPartitions=max(len(tasks_local), 1)
-    )
+    enc = _file_task_encoder(snapshot_id, with_ref_baseline, skip_parts, part_prefix)
 
-    def enc(batches):
-        import pyarrow as pa
+    def enc_write(task):
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
-        for batch in batches:
-            for i in batch.column("id").to_pylist():
-                tkey, path, rg_start, rg_end = tasks_local[int(i)]
-                tbl = _read_task_table(path, rg_start, rg_end)
-                out_batches = list(
-                    _encode_split_by_source(
-                        tbl, tkey, snapshot_id, with_ref_baseline,
-                        skip_parts, part_prefix,
-                    )
-                )
-                if not out_batches:
-                    continue
-                out = pa.Table.from_batches(out_batches, schema=_BLOCKS_ARROW_SCHEMA)
-                fname = os.path.join(blocks_dir, f"blk-{tkey}.parquet")
-                # attempt-unique temp name: concurrent attempts (speculation,
-                # zombie retries) must never interleave writes on one inode;
-                # dot prefix keeps Spark's file index and list_input_files
-                # from ever seeing an in-progress or abandoned temp.
-                ctx = TaskContext.get()
-                attempt = ctx.taskAttemptId() if ctx is not None else os.getpid()
-                tmp = os.path.join(
-                    blocks_dir, f".blk-{tkey}.parquet.inprogress-{attempt}"
-                )
-                # payload bytes are already entropy-coded by the column
-                # codecs — parquet-level snappy on top is pure CPU (guide
-                # §2.3: compressing high-entropy payloads), measured ~35%
-                # of this write+read path for a ~4% size increase.  Every
-                # OTHER column is listed explicitly with snappy: pyarrow
-                # treats columns absent from a compression dict as
-                # UNCOMPRESSED, not as the default codec.
-                pq.write_table(out, tmp, compression=_BLK_COMPRESSION)
-                os.rename(tmp, fname)
-                yield from out.drop_columns(["payload"]).to_batches()
+        out_batches = list(enc(task))
+        if not out_batches:
+            return
+        tkey = task[0]
+        out = pa.Table.from_batches(out_batches, schema=_BLOCKS_ARROW_SCHEMA)
+        fname = os.path.join(blocks_dir, f"blk-{tkey}.parquet")
+        # attempt-unique temp name: concurrent attempts (speculation,
+        # zombie retries) must never interleave writes on one inode;
+        # dot prefix keeps Spark's file index and list_input_files
+        # from ever seeing an in-progress or abandoned temp.
+        ctx = TaskContext.get()
+        attempt = ctx.taskAttemptId() if ctx is not None else os.getpid()
+        tmp = os.path.join(blocks_dir, f".blk-{tkey}.parquet.inprogress-{attempt}")
+        # payload bytes are already entropy-coded by the column
+        # codecs — parquet-level snappy on top is pure CPU (guide
+        # §2.3: compressing high-entropy payloads), measured ~35%
+        # of this write+read path for a ~4% size increase.  Every
+        # OTHER column is listed explicitly with snappy: pyarrow
+        # treats columns absent from a compression dict as
+        # UNCOMPRESSED, not as the default codec.
+        pq.write_table(out, tmp, compression=_BLK_COMPRESSION)
+        os.rename(tmp, fname)
+        yield from out.drop_columns(["payload"]).to_batches()
 
     meta_schema = T.StructType(
         [f for f in BLOCKS_SCHEMA.fields if f.name != "payload"]
     )
-    return paths_df.mapInArrow(enc, schema=meta_schema)
+    return filescan.map_items(spark, tasks, enc_write, meta_schema)
 
 
 def _remove_stale_generations(blocks_dir: str, tasks: list[tuple]) -> None:
@@ -694,45 +669,29 @@ def _engine_block_files_of_scan(blocks: DataFrame) -> list[str] | None:
     """Local file list when ``blocks`` is a bare, unfiltered scan of
     engine-written block files — else None.
 
-    The zero-shuffle decode below is only sound when every partition's
-    rows form exactly one contiguous run in exactly one file.  blk-*
-    files guarantee that by construction (one encode task's output,
-    content-addressed name, atomic rename — re-runs overwrite, never
-    duplicate).  cmp-* files are EXCLUDED even though compact_blocks
-    preserves run contiguity: compaction concatenates whatever .parquet
-    files a directory holds, and a directory that ever saw the JVM-append
-    encode modes (part-* files) can carry crash-window duplicate part
-    rows — folded into cmp files, the same part then appears as multiple
-    runs, which the grouped path collapses (by_col last-wins) but a
-    per-run decode would double (round-6 review finding, reproduced).
-    Anything else — a filtered/joined/cached blocks DataFrame, part-*
-    files, non-local storage, a mid-compaction directory (sidecar/tmp
-    present) — also falls back to the general shuffle path, which assumes
-    nothing about layout."""
-    try:
-        plan = blocks._jdf.queryExecution().optimizedPlan()
-        if plan.getClass().getSimpleName() != "LogicalRelation":
-            return None
-        files = list(blocks.inputFiles())
-    except Exception:  # noqa: BLE001 - internal API drift: use the safe path
+    The bare-scan and local-path decision is filescan.bare_parquet_files;
+    this guard adds only the block-file layout checks.  The zero-shuffle
+    decode below is only sound when every partition's rows form exactly one
+    contiguous run in exactly one file.  blk-* files guarantee that by
+    construction (one encode task's output, content-addressed name, atomic
+    rename — re-runs overwrite, never duplicate).  cmp-* files are EXCLUDED
+    even though compact_blocks preserves run contiguity: compaction
+    concatenates whatever .parquet files a directory holds, and a directory
+    that ever saw the JVM-append encode modes (part-* files) can carry
+    crash-window duplicate part rows — folded into cmp files, the same part
+    then appears as multiple runs, which the grouped path collapses (by_col
+    last-wins) but a per-run decode would double (round-6 review finding,
+    reproduced).  Anything else — part-* files, other columns, a
+    mid-compaction directory (sidecar/tmp present) — also falls back to the
+    general shuffle path, which assumes nothing about layout."""
+    files = filescan.bare_parquet_files(blocks)
+    if files is None or set(blocks.columns) != set(BLOCKS_SCHEMA.names):
         return None
-    if not files:
-        return None
-    if set(blocks.columns) != {f.name for f in BLOCKS_SCHEMA.fields}:
-        return None
-    out: list[str] = []
-    dirs: set[str] = set()
     for f in files:
-        if f.startswith("file:"):
-            f = "/" + f.split(":", 1)[1].lstrip("/")
-        elif "://" in f:
-            return None  # non-local filesystem: keep the generic path
         name = os.path.basename(f)
         if not (name.endswith(".parquet") and name.startswith("blk-")):
             return None
-        out.append(f)
-        dirs.add(os.path.dirname(f))
-    for d in dirs:
+    for d in {os.path.dirname(f) for f in files}:
         try:
             names = os.listdir(d)
         except OSError:
@@ -741,44 +700,36 @@ def _engine_block_files_of_scan(blocks: DataFrame) -> list[str] | None:
             n.endswith(".srcs.json") or n.endswith(".inprogress") for n in names
         ):
             return None  # interrupted compaction: the generic path is safe
-    return sorted(out)
+    return files
 
 
-def _decode_files_df(spark: SparkSession, files: list[str]) -> DataFrame:
+def _decode_files_df(
+    spark: SparkSession, files: list[str], keep_of=None
+) -> DataFrame:
     """mapInArrow decode over an explicit block-file list (one task per
-    file; a part never spans files) — the shared body of
-    decode_blocks_files and decode_blocks' fast path.
+    file; a part never spans files, its rows are one contiguous run) — the
+    shared body of decode_blocks_files, decode_blocks' fast path and
+    decode_blocks_files_pruned.  ``keep_of(path)``, when given, names the
+    part_ids of that file to decode; an empty set skips its payload read."""
 
-    Task dispatch is a JVM-native spark.range with one partition per file;
-    each task resolves its file from the list shipped in the function
-    closure.  Versus createDataFrame(+repartition) this removes both an
-    exchange/stage and a pickled-python-RDD deserialization hop per task
-    (measured ~0.3s of fixed overhead at the bench scale).  The closure
-    grows with the file count (~100 B/file) — metadata-sized up to ~1e6
-    files, the same regime every other driver-side file plan here assumes."""
-    files_local = list(files)
-    idx_df = spark.range(
-        len(files_local), numPartitions=max(len(files_local), 1)
-    )
-
-    def dec(batches):
+    def dec(path):
         import pyarrow.parquet as pq
 
-        for batch in batches:
-            for i in batch.column("id").to_pylist():
-                tbl = pq.read_table(files_local[int(i)], use_threads=False)
-                if tbl.num_rows == 0:
-                    continue
-                pids = tbl.column("part_id").to_pylist()
-                start = 0
-                for j in range(1, len(pids) + 1):
-                    if j == len(pids) or pids[j] != pids[start]:
-                        yield from _decode_part_table(
-                            tbl.slice(start, j - start)
-                        ).to_batches()
-                        start = j
+        keep = None if keep_of is None else keep_of(path)
+        if keep is not None and not keep:
+            return  # payload never read
+        tbl = pq.read_table(path, use_threads=False)
+        pids = tbl.column("part_id").to_pylist()
+        start = 0
+        for j in range(1, len(pids) + 1):
+            if j == len(pids) or pids[j] != pids[start]:
+                if keep is None or pids[start] in keep:
+                    yield from _decode_part_table(
+                        tbl.slice(start, j - start)
+                    ).to_batches()
+                start = j
 
-    return idx_df.mapInArrow(dec, schema=DECODED_SCHEMA)
+    return filescan.map_items(spark, files, dec, DECODED_SCHEMA)
 
 
 def decode_blocks(blocks: DataFrame) -> DataFrame:
@@ -859,60 +810,35 @@ def decode_blocks_files_pruned(
     table and scanning the matching slice.
     """
     _repair_compaction(blocks_path, conservative=True)
-    files = list_input_files(blocks_path)
-    files_local = list(files)
-    paths_df = spark.range(
-        len(files_local), numPartitions=max(len(files_local), 1)
-    )
 
-    def dec(batches):
+    def keep_of(path):
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        for batch in batches:
-            for path in (
-                files_local[int(i)] for i in batch.column("id").to_pylist()
-            ):
-                meta = pq.read_table(
-                    path,
-                    columns=["part_id", "column", "stat_min", "stat_max"],
-                    use_threads=False,
-                )
-                if meta.num_rows == 0:
-                    continue
-                is_col = pc.equal(meta.column("column"), column)
-                has_stats = pc.is_valid(meta.column("stat_min"))
-                hit = pc.and_(
-                    pc.and_(is_col, has_stats),
-                    pc.and_(
-                        pc.greater_equal(meta.column("stat_max"), lo),
-                        pc.less_equal(meta.column("stat_min"), hi),
-                    ),
-                )
-                keep = set(
-                    pc.filter(meta.column("part_id"), hit).to_pylist()
-                )
-                # legacy parts with no stats row for `column`: keep
-                stats_parts = set(
-                    pc.filter(
-                        meta.column("part_id"), pc.and_(is_col, has_stats)
-                    ).to_pylist()
-                )
-                keep |= set(meta.column("part_id").to_pylist()) - stats_parts
-                if not keep:
-                    continue  # payload never read
-                tbl = pq.read_table(path, use_threads=False)
-                pids = tbl.column("part_id").to_pylist()
-                start = 0
-                for i in range(1, len(pids) + 1):
-                    if i == len(pids) or pids[i] != pids[start]:
-                        if pids[start] in keep:
-                            yield from _decode_part_table(
-                                tbl.slice(start, i - start)
-                            ).to_batches()
-                        start = i
+        meta = pq.read_table(
+            path,
+            columns=["part_id", "column", "stat_min", "stat_max"],
+            use_threads=False,
+        )
+        is_col = pc.equal(meta.column("column"), column)
+        has_stats = pc.is_valid(meta.column("stat_min"))
+        hit = pc.and_(
+            pc.and_(is_col, has_stats),
+            pc.and_(
+                pc.greater_equal(meta.column("stat_max"), lo),
+                pc.less_equal(meta.column("stat_min"), hi),
+            ),
+        )
+        keep = set(pc.filter(meta.column("part_id"), hit).to_pylist())
+        # legacy parts with no stats row for `column`: keep
+        stats_parts = set(
+            pc.filter(
+                meta.column("part_id"), pc.and_(is_col, has_stats)
+            ).to_pylist()
+        )
+        return keep | (set(meta.column("part_id").to_pylist()) - stats_parts)
 
-    decoded = paths_df.mapInArrow(dec, schema=DECODED_SCHEMA)
+    decoded = _decode_files_df(spark, list_input_files(blocks_path), keep_of)
     return _pruned_residual(decoded, column, lo, hi)
 
 
@@ -927,7 +853,7 @@ def current_blocks(
     """
     _repair_compaction(blocks_path, conservative=True)
     blocks = spark.read.parquet(blocks_path)
-    if mode in ("files", "narrow-ipc"):
+    if mode == "files":
         keys = [file_key(f) for f in resolve_input_files(input_path)]
         return blocks.filter(
             F.substring_index(
@@ -1004,42 +930,30 @@ def compact_blocks(
     if not bins:
         return {"bins": 0, "files_removed": 0}
 
-    bins_local = [json.dumps(b) for b in bins]
-    bins_df = spark.range(len(bins_local), numPartitions=len(bins_local))
-
-    def run(batches):
-        import pyarrow as pa
+    def run(srcs):
         import pyarrow.parquet as pq
 
-        for batch in batches:
-            for srcs_json in (
-                bins_local[int(i)] for i in batch.column("id").to_pylist()
-            ):
-                srcs = json.loads(srcs_json)
-                tables = [pq.read_table(p, use_threads=False) for p in srcs]
-                out = pa.concat_tables(tables, promote_options="permissive")
-                cid = hashlib.sha1(
-                    "".join(
-                        f"{os.path.basename(p)}:{os.path.getsize(p)}"
-                        for p in srcs
-                    ).encode()
-                ).hexdigest()[:16]
-                final = os.path.join(blocks_path, f"cmp-{cid}.parquet")
-                sidecar = final + ".srcs.json"
-                tmp = final + ".inprogress"
-                # same payload-uncompressed policy as the blk writer
-                pq.write_table(out, tmp, compression=_BLK_COMPRESSION)
-                with open(sidecar, "w") as f:
-                    json.dump([os.path.basename(p) for p in srcs], f)
-                os.rename(tmp, final)
-                for p in srcs:
-                    os.remove(p)
-                os.remove(sidecar)
-                yield pa.record_batch(
-                    {"n_files": pa.array([len(srcs)], type=pa.int64())}
-                )
+        tables = [pq.read_table(p, use_threads=False) for p in srcs]
+        out = pa.concat_tables(tables, promote_options="permissive")
+        cid = hashlib.sha1(
+            "".join(
+                f"{os.path.basename(p)}:{os.path.getsize(p)}" for p in srcs
+            ).encode()
+        ).hexdigest()[:16]
+        final = os.path.join(blocks_path, f"cmp-{cid}.parquet")
+        sidecar = final + ".srcs.json"
+        tmp = final + ".inprogress"
+        # same payload-uncompressed policy as the blk writer
+        pq.write_table(out, tmp, compression=_BLK_COMPRESSION)
+        with open(sidecar, "w") as f:
+            json.dump([os.path.basename(p) for p in srcs], f)
+        os.rename(tmp, final)
+        for p in srcs:
+            os.remove(p)
+        os.remove(sidecar)
+        yield pa.record_batch({"n_files": pa.array([len(srcs)], type=pa.int64())})
 
-    rows = bins_df.mapInArrow(run, schema="n_files long").collect()
+    rows = filescan.map_items(spark, bins, run, "n_files long").collect()
     return {
         "bins": len(rows),
         "files_removed": int(sum(r["n_files"] for r in rows)),
@@ -1174,12 +1088,14 @@ def encode_job(
         blocks/   parquet, appended per run
         metrics/  parquet, rebuilt per run (completed part_ids live here)
     """
+    if mode not in ("files", "narrow", "grouped"):
+        raise ValueError(f"unknown encode mode {mode!r}")
     blocks_path = os.path.join(output_path, "blocks")
     metrics_path = os.path.join(output_path, "metrics")
     snapshot_id = snapshot_of(input_path)
 
     cur_keys: set[str] | None = None
-    if mode in ("files", "narrow-ipc"):
+    if mode == "files":
         cur_files = resolve_input_files(input_path)
         cur_keys = {file_key(f) for f in cur_files}
     else:
@@ -1188,7 +1104,7 @@ def encode_job(
     done: set[str] = set()
     if os.path.isdir(metrics_path):
         prev = spark.read.parquet(metrics_path)
-        if mode in ("files", "narrow-ipc"):
+        if mode == "files":
             # files-mode part_ids are content-addressed per file, so any
             # previously encoded partition stays done across snapshots
             # (incremental encode: only new files run)
@@ -1236,16 +1152,6 @@ def encode_job(
         blocks = encode_table_narrow(
             df, snapshot_id, with_ref_baseline,
             skip_parts=frozenset(done) if done else None,
-        )
-        blocks.write.mode("append").parquet(blocks_path)
-    elif mode == "narrow-ipc":
-        # files-mode encode that returns payloads through the JVM writer
-        # (kept for DataFrame-API composition; the default files mode below
-        # writes blocks worker-natively, which measures faster and steadier)
-        blocks = encode_table_files(
-            spark, input_path, snapshot_id, with_ref_baseline,
-            skip_parts=frozenset(done) if done else None,
-            files=cur_files,
         )
         blocks.write.mode("append").parquet(blocks_path)
     else:
@@ -1321,7 +1227,7 @@ def encode_job(
             shutil.rmtree(metrics_path + "_old", ignore_errors=True)
 
         m = metrics  # cached; byte-equal to what metrics_path now holds
-        if mode in ("files", "narrow-ipc"):
+        if mode == "files":
             # report over the CURRENT snapshot's file set: partitions
             # encoded under earlier snapshots count if their file is still
             # in the table; partitions of removed files do not
@@ -1352,7 +1258,7 @@ def encode_job(
         "enc_bytes": int(agg["enc"] or 0),
         "resumed_skipped": (
             len({p for p in done if p.split("#")[-1].split(".")[0] in cur_keys})
-            if mode in ("files", "narrow-ipc")
+            if mode == "files"
             else len(done)
         ),
         "mode": mode,

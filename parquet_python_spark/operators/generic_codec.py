@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import filescan
 from ..codecs import decode_column, encode_column, params_from_json, params_to_json
 from ..codecs.arrow_io import (
     combined_chunks,
@@ -2131,50 +2132,41 @@ def _bare_local_parquet_units(df: DataFrame, needed: list[str]):
     parquet files whose ``needed`` columns all exist in every file with
     value-stable Arrow types (_fast_scan_type_ok) — else None.
 
-    Mirrors engine._engine_block_files_of_scan: the optimized plan must be
-    the LogicalRelation itself (any caller filter/projection/join/cache
-    falls back), every file must be local, and the footers are validated
-    on the driver — a non-parquet relation fails the footer read and falls
-    back too.  units are (file_idx, row_group_idx, n_rows, n_bytes) for
-    every non-empty row group."""
+    The bare-scan and local-path decision is filescan.bare_parquet_files;
+    this guard adds only the footer checks, validated on the driver, and
+    the _FAST_SCAN_MAX_FILES cap.  units are (file_idx, row_group_idx,
+    n_rows, n_bytes) for every non-empty row group."""
     import pyarrow.parquet as pq
 
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        if plan.getClass().getSimpleName() != "LogicalRelation":
-            return None
-        files = list(df.inputFiles())
-    except Exception:  # noqa: BLE001 - internal API drift: use the safe path
+    paths = filescan.bare_parquet_files(df)
+    if paths is None or len(paths) > _FAST_SCAN_MAX_FILES:
         return None
-    if not files or len(files) > _FAST_SCAN_MAX_FILES:
-        return None
-    paths: list[str] = []
-    for f in files:
-        if f.startswith("file:"):
-            f = "/" + f.split(":", 1)[1].lstrip("/")
-        elif "://" in f:
-            return None  # non-local filesystem: keep the generic path
-        paths.append(f)
-    paths.sort()
     units: list[tuple[int, int, int, int]] = []
     first_types: dict[str, pa.DataType] = {}
     try:
         for fi, p in enumerate(paths):
             pf = pq.ParquetFile(p)
-            sch = pf.schema_arrow
+            sch, meta = pf.schema_arrow, pf.metadata
+            kv = meta.metadata or {}
             for c in needed:
                 idx = sch.get_field_index(c)
-                if idx < 0 or not _fast_scan_type_ok(sch.field(idx).type):
+                if idx < 0:
                     return None
+                t = sch.field(idx).type
                 # merge-schema datasets may mix physical types per file
                 # (int32 in one, int64 in another); Spark's scan coerces
                 # to the relation schema, a per-file read would not —
                 # require uniform types across files
-                if first_types.setdefault(c, sch.field(idx).type) != sch.field(
-                    idx
-                ).type:
+                if not _fast_scan_type_ok(t) or first_types.setdefault(c, t) != t:
                     return None
-            meta = pf.metadata
+                # Spark rebases dates of files written in its hybrid-
+                # calendar LEGACY mode (or by Spark < 3.0) on read; a
+                # direct pyarrow read would not (1500-01-01 -> 1500-01-10)
+                if pa.date32() in (t, getattr(t, "value_type", None)) and (
+                    b"org.apache.spark.legacyDateTime" in kv
+                    or kv.get(b"org.apache.spark.version", b"3.0.0") < b"3.0.0"
+                ):
+                    return None
             for rg in range(meta.num_row_groups):
                 rgm = meta.row_group(rg)
                 if rgm.num_rows > 0:
@@ -2252,8 +2244,8 @@ def roundtrip(
     pyarrow instead of receiving rows through Spark's scan -> Arrow IPC
     conversion — measured, that conversion (an identity mapInArrow over
     the 10x lineitem scan) costs ~12x the scan itself and dominated the
-    fused round-trip.  Task dispatch is one task per row group (the same
-    range+closure shape as the engine's decode fast path); in the
+    fused round-trip.  Task dispatch is one task per row group
+    (filescan.map_items, shared with the engine's file paths); in the
     few-row-group regime the groups are split into ~TARGET-sized pieces
     for parallelism (each piece re-reads its row group — bounded by
     _FAST_SCAN_SPLIT_BYTES_CAP, and only when row groups < cores, where
@@ -2280,30 +2272,25 @@ def roundtrip(
                 units, df.sparkSession.sparkContext.defaultParallelism
             )
 
-            def rt_files(batches):
+            def rt_files(task):
                 import pyarrow.parquet as pq
 
-                for b in batches:
-                    for i in b.column("id").to_pylist():
-                        fi, rg, s, ln = tasks[int(i)]
-                        tbl = (
-                            pq.ParquetFile(paths[fi])
-                            .read_row_group(rg, columns=sel, use_threads=False)
-                            .select(sel)
-                            .slice(s, ln)
-                        )
-                        off = 0
-                        while off < tbl.num_rows:
-                            chunk = tbl.slice(
-                                off, TARGET_ROWS_PER_PART
-                            ).combine_chunks()
-                            off += chunk.num_rows
-                            yield from dec(enc(chunk, part_id=0)).to_batches()
+                fi, rg, s, ln = task
+                tbl = (
+                    pq.ParquetFile(paths[fi])
+                    .read_row_group(rg, columns=sel, use_threads=False)
+                    .select(sel)
+                    .slice(s, ln)
+                )
+                off = 0
+                while off < tbl.num_rows:
+                    chunk = tbl.slice(off, TARGET_ROWS_PER_PART).combine_chunks()
+                    off += chunk.num_rows
+                    yield from dec(enc(chunk, part_id=0)).to_batches()
 
-            idx = df.sparkSession.range(
-                len(tasks), numPartitions=max(len(tasks), 1)
+            decoded = filescan.map_items(
+                df.sparkSession, tasks, rt_files, out_schema
             )
-            decoded = idx.mapInArrow(rt_files, schema=out_schema)
         else:
             # few-split scans would serialize the whole encode on a handful
             # of tasks; the shared conditional bump (pipeline_ops)

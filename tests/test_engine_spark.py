@@ -154,6 +154,15 @@ def test_encode_job_resume(spark, tokens_df, tmp_path, mode):
     assert _as_sorted_rows(decoded) == _as_sorted_rows(src)
 
 
+def test_encode_job_rejects_unknown_mode(tmp_path):
+    """An unknown mode fails up front, before any read or write (the
+    retired narrow-ipc included); no Spark work is needed to reject it."""
+    out = tmp_path / "enc"
+    with pytest.raises(ValueError, match="narrow-ipc"):
+        encode_job(None, str(tmp_path / "missing"), str(out), mode="narrow-ipc")
+    assert not out.exists()
+
+
 def test_metrics_lineage_columns(spark, tokens_df, tmp_path):
     inp = str(tmp_path / "input")
     out = str(tmp_path / "encoded")

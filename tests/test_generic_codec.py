@@ -204,8 +204,9 @@ def test_roundtrip_file_direct_fast_path(spark):
 def test_roundtrip_file_direct_fallbacks(spark):
     """The fast path must refuse anything that is not a bare local parquet
     scan: filtered/derived inputs keep the scan-fed fused path (plan
-    retains the parquet scan), and timestamp columns are excluded because
-    Spark's Arrow conversion applies session-timezone semantics."""
+    retains the parquet scan), a non-parquet file relation is refused, and
+    timestamp columns are excluded because Spark's Arrow conversion applies
+    session-timezone semantics."""
     from parquet_python_spark.operators.generic_codec import (
         _bare_local_parquet_units,
     )
@@ -243,6 +244,16 @@ def test_roundtrip_file_direct_fallbacks(spark):
         rt2 = roundtrip(ts_df, "l_orderkey", {"l_orderkey": "int"})
         assert _sorted(rt2) == _sorted(ts_df.select("l_orderkey"))
 
+        # a json relation is a LogicalRelation too: its file format is
+        # not ParquetFileFormat, so the scan-fed path is kept
+        li.select("l_orderkey").write.json(f"{d}/js_table")
+        js_df = spark.read.json(f"{d}/js_table")
+        assert _bare_local_parquet_units(js_df, ["l_orderkey"]) is None
+        rt3 = roundtrip(js_df, "l_orderkey", {"l_orderkey": "int"})
+        plan3 = rt3._jdf.queryExecution().executedPlan().toString()
+        assert "Range" not in plan3
+        assert _sorted(rt3) == _sorted(js_df)
+
 
 def test_roundtrip_file_direct_row_group_split(spark, tmp_path):
     """In the few-row-group regime the fast path splits a large row group
@@ -259,14 +270,61 @@ def test_roundtrip_file_direct_row_group_split(spark, tmp_path):
     old = gc.TARGET_ROWS_PER_PART
     gc.TARGET_ROWS_PER_PART = 1000  # force splitting on the small fixture
     try:
+        _paths, units = gc._bare_local_parquet_units(back, ["k", "v"])
+        parallelism = spark.sparkContext.defaultParallelism
+        assert len(units) == 1 < parallelism
+        assert len(gc._file_direct_tasks(units, parallelism)) > 1
         rt = gc.roundtrip(back, "k", {"k": "int", "v": "int"})
-        n_tasks = rt._jdf.queryExecution().executedPlan().toString().count(
-            "Range"
-        )
-        assert n_tasks >= 1
         assert _sorted(rt) == _sorted(back.select("k", "v"))
     finally:
         gc.TARGET_ROWS_PER_PART = old
+
+
+def test_roundtrip_file_direct_refuses_legacy_dates(spark, tmp_path):
+    """Spark rebases dates of files written in LEGACY (hybrid-calendar)
+    mode on read; a direct pyarrow read does not.  The guard refuses such
+    files when a needed column is a date, so roundtrip keeps Spark's scan.
+    (roundtrip cannot carry a DateType column itself, so the date is the
+    sort key here and the divergence is shown on the raw reads.)"""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    import parquet_python_spark.operators.generic_codec as gc
+
+    path = str(tmp_path / "legacy_dates")
+    key = "spark.sql.parquet.datetimeRebaseModeInWrite"
+    spark.conf.set(key, "LEGACY")
+    try:
+        spark.sql(
+            "SELECT id AS k, date'1500-01-01' AS d, "
+            "array(date'1500-01-01') AS ds FROM range(20)"
+        ).coalesce(1).write.parquet(path)
+    finally:
+        spark.conf.unset(key)
+    df = spark.read.parquet(path)
+    # the divergence the guard prevents: Spark's scan vs a direct read
+    assert {r["d"].isoformat() for r in df.collect()} == {"1500-01-01"}
+    (f,) = glob.glob(f"{path}/*.parquet")
+    assert pq.read_table(f).column("d")[0].as_py().isoformat() == "1500-01-10"
+
+    assert gc._bare_local_parquet_units(df, ["d", "k"]) is None
+    assert gc._bare_local_parquet_units(df, ["ds", "k"]) is None
+    assert gc._bare_local_parquet_units(df, ["k"]) is not None
+    rt = gc.roundtrip(df, "d", {"k": "int"})
+    plan = rt._jdf.queryExecution().executedPlan().toString()
+    assert "Scan parquet" in plan  # scan-fed path kept
+    assert _sorted(rt) == _sorted(df.select("k"))
+
+    # files written by Spark < 3.0 carry no legacy key but are hybrid-
+    # calendar too: Spark rebases them on read
+    old = pq.read_table(f)
+    old = old.replace_schema_metadata({"org.apache.spark.version": "2.4.8"})
+    (tmp_path / "spark24").mkdir()
+    pq.write_table(old, str(tmp_path / "spark24" / "f.parquet"))
+    df24 = spark.read.parquet(str(tmp_path / "spark24"))
+    assert {r["d"].isoformat() for r in df24.collect()} == {"1500-01-01"}
+    assert gc._bare_local_parquet_units(df24, ["d", "k"]) is None
 
 
 def test_encode_sort_skip_byte_identical(spark):
