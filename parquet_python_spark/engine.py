@@ -2,25 +2,22 @@
 reference's single-threaded row-group walk (SURVEY.md §3).
 
 Mapping (SURVEY.md §1.3):
-    row group      -> DataFrame partition   (repartition on (source, salt))
+    row group      -> one encode task       (input file / row-group range)
     column chunk   -> one row of the blocks table
     page decode    -> vectorized numpy kernels inside applyInPandas
     row pivot      -> never (Arrow-columnar end to end)
 
 Scale design notes (targets a 1000-executor cluster; local[32] here):
-  * Default "files" mode is ZERO-shuffle end to end: one task per input
-    file / row-group range, workers read parquet via pyarrow and write their
-    own block files — token payloads never cross the JVM<->python Arrow IPC
+  * encode_job is ZERO-shuffle end to end: one task per input file /
+    row-group range, workers read parquet via pyarrow and write their own
+    block files — token payloads never cross the JVM<->python Arrow IPC
     boundary or an exchange.  decode_blocks_files mirrors it on the way back.
-  * "grouped" mode (salted shuffle) exists for source-pure chunk layouts:
-    per-source token totals are tiny aggregates; the salt count per source
-    is sized so each (source, salt) bucket holds ~TARGET_TOKENS_PER_PART
-    tokens — the dominant source (60% of rows in the generator) fans out
-    across the cluster instead of hot-spotting one task.  In files mode the
-    same skew is bounded by row-group-range task splitting instead.
-  * Checkpoint/resume: completed part_ids live in the metrics table; resume
-    anti-joins them (broadcast — the completed list is one row per partition,
-    i.e. metadata-sized even at 10^12 sequences with ~1e5 partitions).
+  * Skew: a dominant source simply spans more files, and _plan_file_tasks
+    splits an oversized file into row-group ranges, so no task outgrows the
+    task-size bound.  Salting by per-source token totals (plan_salts) lives
+    in encode_table, the shuffle path for source-pure chunks.
+  * Checkpoint/resume: part ids are content-addressed per input file; a
+    rerun skips every part whose rows a blk-* or cmp-* file still holds.
   * Lineage: every block row carries (snapshot_id, part_id, codec, bytes,
     crc32 checksum); the metrics table is the per-partition rollup.
 """
@@ -50,6 +47,7 @@ from .codecs import (
 )
 
 TARGET_TOKENS_PER_PART = 4_000_000  # ~16 MB of raw int32 tokens per task
+_MAX_TASK_BYTES = 256 * 1024 * 1024  # files-path task bound (_plan_file_tasks)
 
 BLOCKS_SCHEMA = T.StructType(
     [
@@ -117,21 +115,6 @@ DECODED_SCHEMA = T.StructType(
     ]
 )
 
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("part_id", T.StringType(), False),
-        T.StructField("source", T.StringType(), False),
-        T.StructField("snapshot_id", T.StringType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("n_tokens", T.LongType(), False),
-        T.StructField("raw_bytes", T.LongType(), False),
-        T.StructField("enc_bytes", T.LongType(), False),
-        T.StructField("tokens_codec", T.StringType(), False),
-        T.StructField("checksum", T.LongType(), False),
-        T.StructField("encode_ms", T.DoubleType(), False),
-    ]
-)
-
 
 # --------------------------------------------------------------- salting
 
@@ -193,8 +176,8 @@ def _encode_partition_table(
     from their (offsets, data) buffers.  No per-row Python anywhere.
 
     The doc_id sort canonicalizes row order so the encoded payload is
-    deterministic regardless of upstream arrival order (shuffle in grouped
-    mode) — required for idempotent resume.  Callers that already sorted
+    deterministic regardless of upstream arrival order (encode_table's
+    shuffle) — required for idempotent resume.  Callers that already sorted
     pass presorted=True (the narrow path sorts once per split, not per
     source chunk).
     """
@@ -267,17 +250,17 @@ def _encode_partition_table(
 def encode_table(
     df: DataFrame,
     snapshot_id: str = "",
-    salt_map: dict | None = None,
     target_tokens: int = TARGET_TOKENS_PER_PART,
     with_ref_baseline: bool = False,
 ) -> DataFrame:
     """tokens DataFrame -> blocks DataFrame (one row per (partition, column)).
 
     Single shuffle: repartition on (source, salt); then applyInPandas runs
-    the numpy encode kernels per bucket.
+    the numpy encode kernels per bucket.  The salt count per source is sized
+    so each (source, salt) bucket holds ~target_tokens tokens — a dominant
+    source fans out across the cluster instead of hot-spotting one task.
     """
-    salt_map = salt_map or plan_salts(df, target_tokens)
-    with_pid = with_partition_id(df, salt_map)
+    with_pid = with_partition_id(df, plan_salts(df, target_tokens))
 
     def enc(tbl):
         return _encode_partition_table(tbl, snapshot_id, with_ref_baseline)
@@ -288,11 +271,7 @@ def encode_table(
 
 
 def encode_table_narrow(
-    df: DataFrame,
-    snapshot_id: str = "",
-    with_ref_baseline: bool = False,
-    skip_parts: frozenset | None = None,
-    part_prefix: str = "",
+    df: DataFrame, snapshot_id: str = "", part_prefix: str = ""
 ) -> DataFrame:
     """Zero-shuffle encode: mapInArrow over the scan, one chunk per
     (source, input split).
@@ -320,7 +299,7 @@ def encode_table_narrow(
         # per-chunk doc_id sorts.
         tbl = pa.Table.from_batches(batch_list)
         yield from _encode_split_by_source(
-            tbl, split_id, snapshot_id, with_ref_baseline, skip_parts, part_prefix
+            tbl, split_id, snapshot_id, part_prefix=part_prefix
         )
 
     return df.mapInArrow(enc, schema=BLOCKS_SCHEMA)
@@ -329,7 +308,7 @@ def encode_table_narrow(
 def file_key(path: str) -> str:
     """Content-addressed file id (64-bit hash of name:size:mtime_ns) —
     stable across snapshots and listing order; keys incremental encode +
-    resume in files mode.  mtime_ns is folded in so a file rewritten IN
+    resume.  mtime_ns is folded in so a file rewritten IN
     PLACE with unchanged name+size gets a new key and re-encodes (Iceberg
     data files are immutable, but the bare-parquet-dir fallback makes no
     such promise).  64 bits, not crc32: at ~10^5 files a 32-bit key has
@@ -364,11 +343,7 @@ def encode_table_files(
     spark: SparkSession,
     input_path: str,
     snapshot_id: str = "",
-    with_ref_baseline: bool = False,
-    skip_parts: frozenset | None = None,
-    part_prefix: str = "",
-    files: list[str] | None = None,
-    max_task_bytes: int = 256 * 1024 * 1024,
+    max_task_bytes: int = _MAX_TASK_BYTES,
 ) -> DataFrame:
     """Fastest scale path: one task per input file, workers read parquet via
     pyarrow directly.
@@ -386,15 +361,13 @@ def encode_table_files(
     re-snapshotted, only the new files encode (incremental processing),
     and an in-place rewrite changes the key and re-encodes.
     """
-    files = files if files is not None else resolve_input_files(input_path)
-    enc = _file_task_encoder(snapshot_id, with_ref_baseline, skip_parts, part_prefix)
-    return filescan.map_items(
-        spark, _plan_file_tasks(files, max_task_bytes), enc, BLOCKS_SCHEMA
-    )
+    tasks = _plan_file_tasks(resolve_input_files(input_path), max_task_bytes)
+    enc = _file_task_encoder(snapshot_id)
+    return filescan.map_items(spark, tasks, enc, BLOCKS_SCHEMA)
 
 
-def _file_task_encoder(snapshot_id, with_ref_baseline, skip_parts, part_prefix):
-    """Per-task body of the files-mode encoders: read one planned
+def _file_task_encoder(snapshot_id, with_ref_baseline=False, skip_parts=None):
+    """Per-task body of the files-path encoders: read one planned
     (task_key, path, rg_start, rg_end) task — the whole file, or a
     row-group range — and yield its blocks batches."""
 
@@ -409,7 +382,7 @@ def _file_task_encoder(snapshot_id, with_ref_baseline, skip_parts, part_prefix):
                 list(range(rg_start, rg_end)), use_threads=False
             )
         yield from _encode_split_by_source(
-            tbl, tkey, snapshot_id, with_ref_baseline, skip_parts, part_prefix
+            tbl, tkey, snapshot_id, with_ref_baseline, skip_parts
         )
 
     return enc
@@ -422,11 +395,9 @@ def encode_table_files_native(
     snapshot_id: str = "",
     with_ref_baseline: bool = False,
     skip_parts: frozenset | None = None,
-    part_prefix: str = "",
     files: list[str] | None = None,
-    max_task_bytes: int = 256 * 1024 * 1024,
 ) -> DataFrame:
-    """files-mode encode with WORKER-NATIVE block writes.
+    """files-path encode with WORKER-NATIVE block writes (encode_job's path).
 
     Each task writes its own parquet block file (pyarrow) under blocks_dir —
     the encoded payloads never cross the python->JVM Arrow IPC boundary nor
@@ -441,9 +412,9 @@ def encode_table_files_native(
     """
     files = files if files is not None else resolve_input_files(input_path)
     os.makedirs(blocks_dir, exist_ok=True)
-    tasks = _plan_file_tasks(files, max_task_bytes)
+    tasks = _plan_file_tasks(files, _MAX_TASK_BYTES)
     _remove_stale_generations(blocks_dir, tasks)
-    enc = _file_task_encoder(snapshot_id, with_ref_baseline, skip_parts, part_prefix)
+    enc = _file_task_encoder(snapshot_id, with_ref_baseline, skip_parts)
 
     def enc_write(task):
         import pyarrow.parquet as pq
@@ -482,13 +453,14 @@ def encode_table_files_native(
 def _remove_stale_generations(blocks_dir: str, tasks: list[tuple]) -> None:
     """Drop block files from an older task-boundary generation.
 
-    Task keys embed max_task_bytes-dependent row-group boundaries
-    (fk vs fk.rgN); re-running encode with a different max_task_bytes
-    re-encodes under new keys while the old blk-<fk>*.parquet files remain,
-    and current_blocks' file-key-prefix filter would double-count those
-    rows.  Driver-side (race-free: before any task runs): for every file
-    key in the CURRENT plan, delete blk files whose task key is not in the
-    plan.  Blocks of files no longer in the input are untouched (history)."""
+    Task keys embed row-group boundaries that depend on the task-size
+    bound (fk vs fk.rgN); re-running encode under a different bound
+    (_MAX_TASK_BYTES) re-encodes under new keys while the old
+    blk-<fk>*.parquet files remain, and current_blocks' file-key-prefix
+    filter would double-count those rows.  Driver-side (race-free: before
+    any task runs): for every file key in the CURRENT plan, delete blk
+    files whose task key is not in the plan.  Blocks of files no longer in
+    the input are untouched (history)."""
     planned = {t[0] for t in tasks}
     fks = {k.split(".")[0] for k in planned}
     for name in os.listdir(blocks_dir):
@@ -572,7 +544,8 @@ def _plan_file_tasks(files: list[str], max_task_bytes: int) -> list[tuple]:
 
 
 def _encode_split_by_source(
-    tbl, split_id, snapshot_id, with_ref_baseline, skip_parts, part_prefix
+    tbl, split_id, snapshot_id, with_ref_baseline=False, skip_parts=None,
+    part_prefix="",
 ):
     """Sort one split's table by (source, doc_id) and encode each source run
     as one partition chunk (shared by the narrow and files paths)."""
@@ -677,7 +650,7 @@ def _engine_block_files_of_scan(blocks: DataFrame) -> list[str] | None:
     rename — re-runs overwrite, never duplicate).  cmp-* files are EXCLUDED
     even though compact_blocks preserves run contiguity: compaction
     concatenates whatever .parquet files a directory holds, and a directory
-    that ever saw the JVM-append encode modes (part-* files) can carry
+    that ever received JVM-appended blocks (part-* files) can carry
     crash-window duplicate part rows — folded into cmp files, the same part
     then appears as multiple runs, which the grouped path collapses (by_col
     last-wins) but a per-run decode would double (round-6 review finding,
@@ -843,7 +816,7 @@ def decode_blocks_files_pruned(
 
 
 def current_blocks(
-    spark: SparkSession, input_path: str, blocks_path: str, mode: str = "files"
+    spark: SparkSession, input_path: str, blocks_path: str
 ) -> DataFrame:
     """Blocks rows belonging to the input's CURRENT state.
 
@@ -852,15 +825,17 @@ def current_blocks(
     e.g. the encode job's --verify round-trip — filter through this.
     """
     _repair_compaction(blocks_path, conservative=True)
-    blocks = spark.read.parquet(blocks_path)
-    if mode == "files":
-        keys = [file_key(f) for f in resolve_input_files(input_path)]
-        return blocks.filter(
-            F.substring_index(
-                F.substring_index(F.col("part_id"), "#", -1), ".", 1
-            ).isin(keys)
-        )
-    return blocks.filter(F.col("snapshot_id") == snapshot_of(input_path))
+    keys = {file_key(f) for f in resolve_input_files(input_path)}
+    return _of_file_keys(spark.read.parquet(blocks_path), keys)
+
+
+def _of_file_keys(df: DataFrame, keys: set[str]) -> DataFrame:
+    """Rows whose part_id (f"{source}#{file_key}[.rgN]") names one of keys."""
+    return df.filter(
+        F.substring_index(
+            F.substring_index(F.col("part_id"), "#", -1), ".", 1
+        ).isin(sorted(keys))
+    )
 
 
 def decode_blocks_files(spark: SparkSession, blocks_path: str) -> DataFrame:
@@ -1010,15 +985,15 @@ def _repair_compaction(blocks_path: str, conservative: bool = False) -> None:
             pass
 
 
-def _task_keys_in_compacted(blocks_path: str) -> set[str]:
-    """Task keys whose block rows live inside cmp-*.parquet files (one
+def _parts_in_compacted(blocks_path: str) -> set[str]:
+    """part_ids whose block rows live inside cmp-*.parquet files (one
     part_id-column read per compacted file; compaction keeps file counts
     small by construction, so this stays metadata-cheap)."""
-    keys: set[str] = set()
+    parts: set[str] = set()
     try:
         names = os.listdir(blocks_path)
     except OSError:
-        return keys
+        return parts
     import pyarrow.parquet as pq
 
     for name in names:
@@ -1032,11 +1007,8 @@ def _task_keys_in_compacted(blocks_path: str) -> set[str]:
             )
         except OSError:
             continue
-        keys.update(
-            p.rsplit("#", 1)[-1]
-            for p in set(pids.column("part_id").to_pylist())
-        )
-    return keys
+        parts.update(pids.column("part_id").to_pylist())
+    return parts
 
 
 # ----------------------------------------------------- job with resume
@@ -1070,110 +1042,70 @@ def encode_job(
     spark: SparkSession,
     input_path: str,
     output_path: str,
-    target_tokens: int = TARGET_TOKENS_PER_PART,
     with_ref_baseline: bool = False,
-    mode: str = "files",
 ) -> dict:
-    """Resumable encode job: skip partitions already in the metrics table.
+    """Resumable encode job: skip partitions whose blocks already exist.
 
-    mode="files" (default): zero-shuffle, python-native scan — one task per
-    input file, workers read parquet via pyarrow (no JVM decode / Arrow IPC
-    double pass) — the fastest scale path.
-    mode="narrow": zero-shuffle mapInArrow over the JVM scan, one chunk per
-    (source, input split).
-    mode="grouped": salted-shuffle encode (one chunk per (source, salt)) for
-    source-pure chunk layouts sized independently of the input split plan.
+    Zero-shuffle, python-native scan (encode_table_files_native): one task
+    per input file, or per row-group range of an oversized file — that
+    split is what bounds job skew (_plan_file_tasks).  Workers read parquet
+    via pyarrow and write their own blk-*.parquet files, so no token byte
+    crosses the JVM decode / Arrow IPC double pass.
+
+    Resume keys on content-addressed part ids (f"{source}#{file_key}"), so
+    it survives re-snapshots: when an input table gains files, only the new
+    files encode, and a file rewritten in place gets a new key.
 
     Layout under output_path:
-        blocks/   parquet, appended per run
-        metrics/  parquet, rebuilt per run (completed part_ids live here)
+        blocks/   blk-*.parquet per task (cmp-* after compact_blocks),
+                  committed as an iceberg-lite snapshot
+        metrics/  parquet, rebuilt per run (per-partition rollup)
     """
-    if mode not in ("files", "narrow", "grouped"):
-        raise ValueError(f"unknown encode mode {mode!r}")
     blocks_path = os.path.join(output_path, "blocks")
     metrics_path = os.path.join(output_path, "metrics")
     snapshot_id = snapshot_of(input_path)
+    cur_files = resolve_input_files(input_path)
+    cur_keys = {file_key(f) for f in cur_files}
 
-    cur_keys: set[str] | None = None
-    if mode == "files":
-        cur_files = resolve_input_files(input_path)
-        cur_keys = {file_key(f) for f in cur_files}
-    else:
-        df = spark.read.parquet(input_path)
-
-    done: set[str] = set()
+    # A part is done only while rows backing it still exist.  A metrics row
+    # counts if the task's own blk file is still there: a crash between
+    # stale-generation cleanup and re-encode would otherwise let a later
+    # run skip the partition and commit a snapshot with its rows missing.
+    # Parts that compact_blocks folded into cmp files count with or without
+    # a metrics row (a crash before the metrics swap loses their metrics
+    # rows, not their blocks) — re-encoding them would DOUBLE their rows.
+    done = _parts_in_compacted(blocks_path)
     if os.path.isdir(metrics_path):
-        prev = spark.read.parquet(metrics_path)
-        if mode == "files":
-            # files-mode part_ids are content-addressed per file, so any
-            # previously encoded partition stays done across snapshots
-            # (incremental encode: only new files run)
-            prev_f = prev
-        else:
-            prev_f = prev.filter(F.col("snapshot_id") == snapshot_id)
-        done = {
+        prev = spark.read.parquet(metrics_path).select("part_id").distinct()
+        done |= {
             r["part_id"]
-            for r in prev_f.select("part_id").distinct().collect()
-        }
-        if mode == "files":
-            # a metrics row is only trustworthy if its backing rows still
-            # exist: either the task's own blk file, or — after
-            # compact_blocks folded it away — a cmp file holding its task
-            # key.  A crash between stale-generation cleanup and re-encode
-            # would otherwise let a later run skip the partition and commit
-            # a snapshot with those rows missing; conversely, re-encoding a
-            # compacted partition would DOUBLE its rows.
-            cmp_keys = _task_keys_in_compacted(blocks_path)
-            done = {
-                p
-                for p in done
-                if os.path.exists(
-                    os.path.join(
-                        blocks_path, f"blk-{p.split('#')[-1]}.parquet"
-                    )
+            for r in prev.collect()
+            if os.path.exists(
+                os.path.join(
+                    blocks_path, f"blk-{r['part_id'].split('#')[-1]}.parquet"
                 )
-                or p.split("#")[-1] in cmp_keys
-            }
+            )
+        }
 
-    if mode == "grouped":
-        salt_map = plan_salts(df, target_tokens)
-        with_pid = with_partition_id(df, salt_map)
-        if done:
-            # anti-join against the completed set (broadcast; metadata-sized)
-            done_df = spark.createDataFrame([(p,) for p in done], ["part_id"])
-            with_pid = with_pid.join(F.broadcast(done_df), "part_id", "left_anti")
+    meta = encode_table_files_native(
+        spark, input_path, blocks_path, snapshot_id, with_ref_baseline,
+        skip_parts=frozenset(done) if done else None,
+        files=cur_files,
+    )
+    meta.count()  # execute: workers write blk-*.parquet themselves
+    from .sources.iceberg_lite import write_snapshot
 
-        def enc(tbl):
-            return _encode_partition_table(tbl, snapshot_id, with_ref_baseline)
-
-        blocks = with_pid.groupBy("part_id").applyInArrow(enc, schema=BLOCKS_SCHEMA)
-        blocks.write.mode("append").parquet(blocks_path)
-    elif mode == "narrow":
-        blocks = encode_table_narrow(
-            df, snapshot_id, with_ref_baseline,
-            skip_parts=frozenset(done) if done else None,
-        )
-        blocks.write.mode("append").parquet(blocks_path)
-    else:
-        meta = encode_table_files_native(
-            spark, input_path, blocks_path, snapshot_id, with_ref_baseline,
-            skip_parts=frozenset(done) if done else None,
-            files=cur_files,
-        )
-        meta.count()  # execute: workers write blk-*.parquet themselves
-        from .sources.iceberg_lite import write_snapshot
-
-        write_snapshot(blocks_path)  # commit the blocks dir as a snapshot
+    write_snapshot(blocks_path)  # commit the blocks dir as a snapshot
 
     # Idempotent rollup: metrics := aggregate of everything in blocks/.
     # Parquet column pruning keeps the payload column unread here, so this
     # scans metadata-sized data even at 10^12-sequence scale.
-    # The per-chunk groupBy-max heals the crash window between a committed
-    # blocks write and the metrics write: a rerun re-appends identical
-    # blocks (encode is deterministic over sorted content), and max over
-    # byte-identical duplicate rows collapses them exactly as the former
-    # dropDuplicates pass did — without carrying every column through a
-    # dedicated deduplication exchange first.
+    # The per-chunk groupBy-max keeps the rollup exact over duplicate chunk
+    # rows (a directory that ever received JVM-appended blocks can hold
+    # them; encode is deterministic over sorted content, so they are
+    # byte-identical): max collapses them exactly as a dropDuplicates pass
+    # would — without carrying every column through a dedicated
+    # deduplication exchange first.
     all_blocks = spark.read.parquet(blocks_path).select(
         "part_id", "source", "snapshot_id", "column", "codec",
         "n_values", "n_rows", "raw_bytes", "enc_bytes", "checksum", "encode_ms",
@@ -1226,19 +1158,11 @@ def encode_job(
 
             shutil.rmtree(metrics_path + "_old", ignore_errors=True)
 
-        m = metrics  # cached; byte-equal to what metrics_path now holds
-        if mode == "files":
-            # report over the CURRENT snapshot's file set: partitions
-            # encoded under earlier snapshots count if their file is still
-            # in the table; partitions of removed files do not
-            m = m.filter(
-                F.substring_index(
-                    F.substring_index(F.col("part_id"), "#", -1), ".", 1
-                ).isin(list(cur_keys))
-            )
-        else:
-            m = m.filter(F.col("snapshot_id") == snapshot_id)
-        agg = m.agg(
+        # report over the CURRENT snapshot's file set (metrics is cached and
+        # byte-equal to what metrics_path now holds): partitions encoded
+        # under earlier snapshots count if their file is still in the
+        # table; partitions of removed files do not
+        agg = _of_file_keys(metrics, cur_keys).agg(
             F.count("*").alias("parts"),
             F.sum("n_rows").alias("rows"),
             F.sum("n_tokens").alias("tokens"),
@@ -1256,11 +1180,7 @@ def encode_job(
         "tokens": int(agg["tokens"] or 0),
         "raw_bytes": int(agg["raw"] or 0),
         "enc_bytes": int(agg["enc"] or 0),
-        "resumed_skipped": (
-            len({p for p in done if p.split("#")[-1].split(".")[0] in cur_keys})
-            if mode == "files"
-            else len(done)
+        "resumed_skipped": len(
+            {p for p in done if p.split("#")[-1].split(".")[0] in cur_keys}
         ),
-        "mode": mode,
-        "salt_map": json.dumps(salt_map) if mode == "grouped" else None,
     }

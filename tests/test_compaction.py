@@ -121,7 +121,7 @@ def test_stale_generation_rewritten_inside_compacted(spark, tmp_path):
     inp = str(tmp_path / "inp")
     df.repartition(4).write.parquet(inp)
     out = str(tmp_path / "enc")
-    encode_job(spark, inp, out, mode="files")
+    encode_job(spark, inp, out)
     bdir = os.path.join(out, "blocks")
     compact_blocks(spark, bdir, target_bytes=1 << 30)
 
@@ -133,13 +133,13 @@ def test_stale_generation_rewritten_inside_compacted(spark, tmp_path):
     _time.sleep(0.01)
     os.utime(vpath)
 
-    encode_job(spark, inp, out, mode="files")
+    encode_job(spark, inp, out)
     # the rewritten file's old generation is history (new file key); the
     # CURRENT view must hold exactly one generation of every row, including
     # rows that now live inside cmp files
     from parquet_python_spark.engine import decode_blocks
 
-    cur = current_blocks(spark, inp, bdir, mode="files")
+    cur = current_blocks(spark, inp, bdir)
     assert _rows(decode_blocks(cur)) == _rows(df)
     n_rows_cur = cur.filter(F.col("column") == "doc_id").agg(
         F.sum("n_rows")
@@ -147,19 +147,28 @@ def test_stale_generation_rewritten_inside_compacted(spark, tmp_path):
     assert int(n_rows_cur) == N_ROWS
 
 
-def test_resume_after_compaction_skips_everything(spark, tmp_path):
+@pytest.mark.parametrize(
+    "lose_metrics", [False, True], ids=["metrics_kept", "metrics_lost"]
+)
+def test_resume_after_compaction_skips_everything(spark, tmp_path, lose_metrics):
     """Compaction must not invalidate the resume checkpoint: a re-run over
-    the unchanged input encodes zero new partitions (keys found in cmp)."""
+    the unchanged input encodes zero new partitions (parts found in cmp) —
+    also when the metrics table was lost before compaction (a crash before
+    the metrics swap), where re-encoding would double every row."""
+    import shutil
+
     from parquet_python_spark.engine import encode_job
 
     df = generate_tokens_df(spark, N_ROWS, SEED)
     inp = str(tmp_path / "inp")
     df.repartition(4).write.parquet(inp)
     out = str(tmp_path / "enc")
-    m1 = encode_job(spark, inp, out, mode="files")
+    m1 = encode_job(spark, inp, out)
+    if lose_metrics:
+        shutil.rmtree(os.path.join(out, "metrics"))
     bdir = os.path.join(out, "blocks")
     compact_blocks(spark, bdir, target_bytes=1 << 30)
-    m2 = encode_job(spark, inp, out, mode="files")
+    m2 = encode_job(spark, inp, out)
     assert m2["resumed_skipped"] == m1["partitions"]
     assert _rows(decode_blocks_files(spark, bdir)) == _rows(df)
 

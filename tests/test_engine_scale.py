@@ -179,7 +179,7 @@ def test_encode_job_reencodes_rewritten_file(spark, tmp_path):
     assert stats3["partitions"] > stats3["resumed_skipped"] - 1
     # decoded current blocks reproduce the NEW input bit-for-bit
     dec = decode_blocks(
-        current_blocks(spark, inp, os.path.join(out, "blocks"), "files")
+        current_blocks(spark, inp, os.path.join(out, "blocks"))
     )
     assert _content_hash(spark, dec) == _content_hash(
         spark, spark.read.parquet(inp)

@@ -132,19 +132,18 @@ def test_encode_files_and_decode_files_bit_identity(spark, tokens_df, tmp_path):
     assert _as_sorted_rows(decoded_g) == want
 
 
-@pytest.mark.parametrize("mode", ["files", "narrow", "grouped"])
-def test_encode_job_resume(spark, tokens_df, tmp_path, mode):
+def test_encode_job_resume(spark, tokens_df, tmp_path):
     """Checkpoint/resume: a second run over the same snapshot encodes zero
     new partitions; blocks stay complete and decodable."""
     inp = str(tmp_path / "input")
     out = str(tmp_path / "encoded")
     tokens_df.write.parquet(inp)
 
-    m1 = encode_job(spark, inp, out, target_tokens=50_000, mode=mode)
+    m1 = encode_job(spark, inp, out)
     assert m1["resumed_skipped"] == 0
     assert m1["rows"] == N_ROWS
 
-    m2 = encode_job(spark, inp, out, target_tokens=50_000, mode=mode)
+    m2 = encode_job(spark, inp, out)
     assert m2["resumed_skipped"] == m1["partitions"]
     assert m2["rows"] == N_ROWS  # no duplicates from the rerun
 
@@ -152,15 +151,6 @@ def test_encode_job_resume(spark, tokens_df, tmp_path, mode):
     decoded = decode_blocks(blocks)
     src = spark.read.parquet(inp)
     assert _as_sorted_rows(decoded) == _as_sorted_rows(src)
-
-
-def test_encode_job_rejects_unknown_mode(tmp_path):
-    """An unknown mode fails up front, before any read or write (the
-    retired narrow-ipc included); no Spark work is needed to reject it."""
-    out = tmp_path / "enc"
-    with pytest.raises(ValueError, match="narrow-ipc"):
-        encode_job(None, str(tmp_path / "missing"), str(out), mode="narrow-ipc")
-    assert not out.exists()
 
 
 def test_metrics_lineage_columns(spark, tokens_df, tmp_path):
